@@ -15,13 +15,15 @@ Re-expresses ``SPX.SP_PROCESS_VERTS @D, @MinTime, @W``
      to inner by its WHERE clause; implemented as inner, SURVEY §7.3.5);
   4. outlier flag from 5-row trailing/leading averages per leg pair
      (W1/W2, docs/sql_server.md:484-502);
-  5. VERT definitions: new (SID, LID) pairs with deterministic VID
-     (J3 anti-join, docs/sql_server.md:511-520);
+  5. VERT definitions: distinct (SID, LID) pairs with deterministic VID
+     (docs/sql_server.md:511-520);
   6. net price = short minus long, clamped to [0, W], outliers and
      after-hours rows excluded (F10/P5, docs/sql_server.md:527-546);
   7. 10-row rolling average AVG_R per VID (W3, docs/sql_server.md:562-568);
-  8. MAX-pair dedup per (VID, T) + anti-join against existing VERT_TS
-     (A10/J3, docs/sql_server.md:553-575).
+  8. MAX-pair dedup per (VID, T) (A10, docs/sql_server.md:553-575).
+
+Steps 5 and 8 carry no anti-join: the medallion writes hand their output to
+``ParquetTable.insert_new``, the one anti-join against the existing tables.
 
 Scale notes: the leg self-join is an equi-join on (T, CP, Expiry) with a
 residual band predicate on strikes — Catalyst plans a shuffled hash join on the
@@ -146,21 +148,16 @@ def pair_legs(dense: DataFrame, width: int) -> DataFrame:
     )
 
 
-def build_verts(
-    pairs: DataFrame, width: int, vert: DataFrame | None = None
-) -> DataFrame:
-    """J3: new VERT definitions — distinct (SID, LID) pairs not already defined
-    (docs/sql_server.md:511-520). VID = xxhash64(SID, LID) (SURVEY §4.2)."""
-    defs = (
+def build_verts(pairs: DataFrame, width: int) -> DataFrame:
+    """VERT definitions — the distinct (SID, LID) pairs (docs/sql_server.md:
+    511-520). VID = xxhash64(SID, LID) (SURVEY §4.2)."""
+    return (
         pairs.select("SID", "LID", "SS", "CP", "Expiry")
         .distinct()
         .withColumn("W", F.lit(width))
         .withColumn("VID", surrogate_key("SID", "LID"))
         .select("VID", "SID", "LID", "SS", "W", "CP", "Expiry")
     )
-    if vert is None:
-        return defs
-    return insert_new(defs, vert, keys=["SID", "LID"])
 
 
 def build_vert_ts(
@@ -174,8 +171,8 @@ def build_vert_ts(
 
     Net price ``O = short − long`` clamped to [0, W]; rows flagged as outliers
     (OI=1) are excluded (docs/sql_server.md:541-542); AVG_R is the 10-row
-    rolling average per VID; final MAX-pair dedup per (VID, T) and anti-join
-    against the existing VERT_TS keep the insert idempotent.
+    rolling average per VID; final MAX-pair dedup per (VID, T). Given
+    ``vert_ts``, returns only the rows whose (VID, T) it lacks.
     """
     priced = pairs.withColumn("NET", F.col("SO") - F.col("LO"))
     flagged = with_outlier_flag(
@@ -202,6 +199,25 @@ def build_vert_ts(
     return insert_new(final, vert_ts, keys=["VID", "T"])
 
 
+def _recompute(
+    optm: DataFrame,
+    opt: DataFrame,
+    underlying: DataFrame,
+    min_time: dt.datetime,
+    width: int,
+    opt_range: int,
+    hold=lambda df: df,
+) -> tuple[DataFrame, DataFrame]:
+    """Body of :func:`run_gold` and :func:`gold_scope`: the (VERT, VERT_TS)
+    rows recomputed from ``optm``. ``hold`` wraps the two intermediates both
+    outputs consume (dense legs, leg pairs)."""
+    lo, hi = strike_range(underlying, min_time)
+    dense = hold(densify_legs(optm, opt, min_time, lo - opt_range, hi + opt_range))
+    pairs = hold(pair_legs(dense, width))
+    vert = build_verts(pairs, width)
+    return vert, build_vert_ts(pairs, vert, width)
+
+
 def run_gold(
     optm: DataFrame,
     opt: DataFrame,
@@ -214,7 +230,9 @@ def run_gold(
 ) -> tuple[DataFrame, DataFrame]:
     """Full ``SP_PROCESS_VERTS`` pass → (VERT, VERT_TS) updated tables.
 
-    ``underlying`` carries ($SPX) marks with columns (T, Mark).
+    ``underlying`` carries ($SPX) marks with columns (T, Mark). Given the
+    existing ``vert``/``vert_ts``, returns them plus the recomputed rows whose
+    keys they lack (insert-only).
 
     Lazy one-shot variant: within a single consuming action AQE's
     ReuseExchange dedups the diamond subtrees, so nothing is persisted and no
@@ -223,14 +241,12 @@ def run_gold(
     which persists the diamonds for the duration of the block and releases
     them on exit.
     """
-    lo, hi = strike_range(underlying, min_time)
-    dense = densify_legs(optm, opt, min_time, lo - opt_range, hi + opt_range)
-    pairs = pair_legs(dense, width)
-    new_vert = build_verts(pairs, width, vert)
-    vert_all = new_vert if vert is None else vert.unionByName(new_vert)
-    new_ts = build_vert_ts(pairs, vert_all, width, vert_ts)
-    ts_all = new_ts if vert_ts is None else vert_ts.unionByName(new_ts)
-    return vert_all, ts_all
+    new_vert, new_ts = _recompute(optm, opt, underlying, min_time, width, opt_range)
+    if vert is not None:
+        new_vert = vert.unionByName(insert_new(new_vert, vert, keys=["SID", "LID"]))
+    if vert_ts is not None:
+        new_ts = vert_ts.unionByName(insert_new(new_ts, vert_ts, keys=["VID", "T"]))
+    return new_vert, new_ts
 
 
 @contextlib.contextmanager
@@ -241,27 +257,25 @@ def gold_scope(
     min_time: dt.datetime,
     width: int,
     opt_range: int = 100,
-    vert: DataFrame | None = None,
-    vert_ts: DataFrame | None = None,
 ):
-    """Persist-hygienic ``SP_PROCESS_VERTS``: yields (VERT, VERT_TS) with the
-    diamond intermediates (dense legs; leg pairs — each consumed by two
-    downstream actions) persisted for the duration of the block, and
-    UNPERSISTED on exit. Run every consuming action (writes/collects) inside
+    """Persist-hygienic ``SP_PROCESS_VERTS``: yields the recomputed (VERT,
+    VERT_TS) rows of ``optm`` with the diamond intermediates persisted for
+    the duration of the block, and UNPERSISTED on exit. Nothing is anti-joined
+    here: the caller's ``ParquetTable.insert_new`` is the one idempotence
+    point of the write. Run every consuming action (writes/collects) inside
     the block. On a long-running driver (the streaming Gold maintenance loop
     calls this once per touched day per micro-batch) un-released caches would
     accumulate storage memory without bound — this scope is the discipline
     that prevents it.
     """
-    lo, hi = strike_range(underlying, min_time)
-    dense = densify_legs(optm, opt, min_time, lo - opt_range, hi + opt_range).persist()
-    pairs = pair_legs(dense, width).persist()
+    held: list[DataFrame] = []
+
+    def hold(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return held[-1]
+
     try:
-        new_vert = build_verts(pairs, width, vert)
-        vert_all = new_vert if vert is None else vert.unionByName(new_vert)
-        new_ts = build_vert_ts(pairs, vert_all, width, vert_ts)
-        ts_all = new_ts if vert_ts is None else vert_ts.unionByName(new_ts)
-        yield vert_all, ts_all
+        yield _recompute(optm, opt, underlying, min_time, width, opt_range, hold)
     finally:
-        pairs.unpersist()
-        dense.unpersist()
+        for df in reversed(held):
+            df.unpersist()

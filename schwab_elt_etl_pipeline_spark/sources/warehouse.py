@@ -188,8 +188,6 @@ class ParquetTable:
     def vacuum(self, keep_last: int = 1) -> list[int]:
         """Delete all but the newest ``keep_last`` versions (never the
         current one). Returns the versions removed."""
-        import shutil
-
         current = self.current_version()
         if current is None:
             return []
@@ -324,8 +322,10 @@ class ParquetTable:
 
     # -- idempotent loads ---------------------------------------------------
     def insert_new(self, batch: DataFrame, keys: Sequence[str]) -> int:
-        """IF-NOT-EXISTS semantics (J3/J9): append only unseen keys.
-        Returns the number of rows inserted.
+        """IF-NOT-EXISTS semantics (J3/J9): append only unseen keys; the
+        first write creates the table (even from an empty batch). Returns the
+        number of rows inserted. The one anti-join of the medallion writes
+        (ARCHITECTURE.md, Idempotence).
 
         Concurrency: the append path assumes ONE writer per key space (the
         streaming foreachBatch contract — Structured Streaming serializes
@@ -334,18 +334,20 @@ class ParquetTable:
         multi-writer ingestion should go through :meth:`merge`
         (``insert_only=True``), whose optimistic conflict detection retries
         from a fresh read instead."""
-        if not self.exists():
-            deduped = batch.dropDuplicates(list(keys))
-            self.overwrite_versioned(deduped)
-            return deduped.count()
-        # one computation for both consumers: count() and append() would
+        version = self.current_version()
+        fresh = (
+            batch.dropDuplicates(list(keys))
+            if version is None
+            else insert_new(batch, self.read(version), keys=keys)
+        )
+        # one computation for both consumers: count() and the write would
         # otherwise each re-run the anti-join + the batch's full lineage —
         # twice per micro-batch on every streaming sink that funnels here
-        fresh = insert_new(batch, self.read(), keys=keys).localCheckpoint(
-            eager=True
-        )
+        fresh = fresh.localCheckpoint(eager=True)
         n = fresh.count()
-        if n:
+        if version is None:
+            self.overwrite_versioned(fresh)
+        elif n:
             self.append(fresh)
         return n
 
@@ -467,25 +469,3 @@ class ParquetTable:
             n_files = max(1, -(-total // max(target_file_bytes, 1)))
             compacted = df.repartition(int(n_files))
         return self.overwrite_versioned(compacted)
-
-
-def save_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int = 8,
-    sort: bool = True,
-) -> None:
-    """Persist as a BUCKETED catalog table (SURVEY §4: the replacement for the
-    reference's B-tree join indexes).
-
-    Two tables bucketed on the same keys with the same bucket count join
-    WITHOUT a shuffle — the hash partitioning is baked into the file layout at
-    write time, which is the big-join co-location strategy at 100 TB (pay the
-    shuffle once at load, never at query time). ``sortBy`` additionally makes
-    the join a merge of pre-sorted buckets.
-    """
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
-    if sort:
-        writer = writer.sortBy(*bucket_cols)
-    writer.saveAsTable(table)

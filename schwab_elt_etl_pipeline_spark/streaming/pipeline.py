@@ -13,16 +13,30 @@ docs/sql_server.md:91-96).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from schwab_elt_etl_pipeline_spark.streaming.runner import start_foreach_batch
-
+from schwab_elt_etl_pipeline_spark.plans import gold
 from schwab_elt_etl_pipeline_spark.plans.silver import (
     build_opt,
     build_optm_increment,
     parse_quotes,
+    parse_underlying,
 )
 from schwab_elt_etl_pipeline_spark.sources.warehouse import ParquetTable
+from schwab_elt_etl_pipeline_spark.streaming.runner import start_foreach_batch
+
+
+def _write_silver(
+    parsed: DataFrame, opt_table: ParquetTable, optm_table: ParquetTable
+) -> None:
+    """Insert-new the batch's contracts into OPT (J3), then its deduped marks
+    into OPTM (J7 insert-only), each through ``ParquetTable.insert_new`` —
+    the one anti-join against the existing table, on the first write too."""
+    opt_table.insert_new(build_opt(parsed), keys=["Strike", "CP", "Expiry"])
+    optm_table.insert_new(
+        build_optm_increment(parsed, opt_table.read()), keys=["OPT_ID", "T"]
+    )
 
 
 def run_streaming_silver(
@@ -42,15 +56,8 @@ def run_streaming_silver(
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         parsed = parse_quotes(batch)
-        if parsed.isEmpty():
-            return
-        if opt_table.exists():
-            new_opt = build_opt(parsed, opt_table.read())
-            opt_table.insert_new(new_opt, keys=["Strike", "CP", "Expiry"])
-        else:
-            opt_table.overwrite_versioned(build_opt(parsed))
-        increment = build_optm_increment(parsed, opt_table.read())
-        optm_table.insert_new(increment, keys=["OPT_ID", "T"])
+        if not parsed.isEmpty():
+            _write_silver(parsed, opt_table, optm_table)
 
     return start_foreach_batch(
         quotes_stream, process_batch, checkpoint_dir, trigger_seconds
@@ -106,14 +113,13 @@ def apply_medallion_batch(
     The SHARED batch unit: ``run_streaming_medallion`` calls this per
     micro-batch, ``plans/backfill.py`` calls it per historical slice — one
     definition of the medallion increment, so reprocessing and live
-    ingestion can never drift apart. All writes are insert-new/anti-join
-    keyed, so applying any slice twice is a no-op.
+    ingestion can never drift apart. Each table is written by exactly one
+    ``ParquetTable.insert_new`` call — the only anti-join against the
+    existing OPT/OPTM/VERT/VERT_TS on this path, first write included — so
+    applying any slice twice is a no-op. Insert-only also means a day's
+    streamed VERT_TS is fixed by that day's first Gold build (ARCHITECTURE.md,
+    Idempotence).
     """
-    import pyspark.sql.functions as F
-
-    from schwab_elt_etl_pipeline_spark.plans.gold import gold_scope
-    from schwab_elt_etl_pipeline_spark.plans.silver import parse_underlying
-
     und = parse_underlying(batch)
     has_und = not und.isEmpty()
     if has_und:
@@ -121,15 +127,7 @@ def apply_medallion_batch(
     parsed = parse_quotes(batch)
     has_parsed = not parsed.isEmpty()
     if has_parsed:
-        if opt_table.exists():
-            opt_table.insert_new(
-                build_opt(parsed, opt_table.read()), keys=["Strike", "CP", "Expiry"]
-            )
-        else:
-            opt_table.overwrite_versioned(build_opt(parsed))
-        optm_table.insert_new(
-            build_optm_increment(parsed, opt_table.read()), keys=["OPT_ID", "T"]
-        )
+        _write_silver(parsed, opt_table, optm_table)
 
     if not underlying_table.exists() or not optm_table.exists():
         return  # Gold needs both marks and an $SPX strike range
@@ -167,20 +165,13 @@ def apply_medallion_batch(
         day, min_time = r["d"], r["min_time"]
         day_optm = optm_all.filter(F.to_date("T") == F.lit(day))
         day_und = und_all.filter(F.to_date("T") == F.lit(day))
-        vert_prev = vert_table.read() if vert_table.exists() else None
-        ts_prev = vert_ts_table.read() if vert_ts_table.exists() else None
         # gold_scope persists the day's diamond intermediates across the
         # two writes below and releases them on exit — the hot loop never
-        # accumulates storage memory across micro-batches.
-        with gold_scope(
+        # accumulates storage memory across micro-batches. It is looked up
+        # on the module at call time, so a wrapper installed there applies.
+        with gold.gold_scope(
             day_optm, opt_all, day_und, min_time=min_time, width=width,
-            opt_range=opt_range, vert=vert_prev, vert_ts=ts_prev,
-        ) as (vert_all, ts_all):
-            if vert_prev is None:
-                vert_table.overwrite_versioned(vert_all)
-            else:
-                vert_table.insert_new(vert_all, keys=["SID", "LID"])
-            if ts_prev is None:
-                vert_ts_table.overwrite_versioned(ts_all)
-            else:
-                vert_ts_table.insert_new(ts_all, keys=["VID", "T"])
+            opt_range=opt_range,
+        ) as (vert, vert_ts):
+            vert_table.insert_new(vert, keys=["SID", "LID"])
+            vert_ts_table.insert_new(vert_ts, keys=["VID", "T"])

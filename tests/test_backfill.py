@@ -70,8 +70,13 @@ def test_backfill_range_idempotent_and_rebuild(spark, wh):
     }
     assert ts_days == {dt.date(2024, 6, 17), dt.date(2024, 6, 18)}
 
-    # re-running the same backfill inserts nothing
+    assert all(t.exists() for t in tables.values())
+
+    # re-running the same backfill inserts nothing: no new version and no
+    # appended (empty) file in any table
+    state = {n: (t.current_version(), sorted(t.data_files())) for n, t in tables.items()}
     run()
+    assert {n: (t.current_version(), sorted(t.data_files())) for n, t in tables.items()} == state
     assert tables["vert"].read().count() == n_vert
     assert tables["vert_ts"].read().count() == n_ts
 

@@ -197,10 +197,11 @@ def test_gold_scope_releases_caches(spark, quotes):
     with gold.gold_scope(
         optm, opt, underlying, min_time=min_time, width=5, opt_range=100
     ) as (v_all, ts_all):
-        n_vert, n_ts = v_all.count(), ts_all.count()
-        assert n_vert > 0 and n_ts > 0
+        scope_vert, scope_ts = sorted(v_all.collect()), sorted(ts_all.collect())
+        assert scope_vert and scope_ts
         assert len(_persistent_rdd_ids(spark) - baseline) > 0  # in scope
     assert _persistent_rdd_ids(spark) - baseline == set()  # released
 
-    # scope output matches the lazy variant
-    assert n_vert == vert.count() and n_ts == vert_ts.count()
+    # scope output matches the lazy variant row for row
+    assert scope_vert == sorted(vert.collect())
+    assert scope_ts == sorted(vert_ts.collect())

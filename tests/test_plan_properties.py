@@ -211,15 +211,15 @@ def test_bucketed_join_elides_shuffle(spark, sf_dir):
     tables bucketed on the join key must sort-merge-join with NO exchange."""
     from pyspark.sql import functions as F
 
-    from schwab_elt_etl_pipeline_spark.sources.warehouse import save_bucketed
+    from schwab_elt_etl_pipeline_spark.sources.bucketed import save_bucketed
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         li = load_table(spark, sf_dir, "lineitem")
         o = load_table(spark, sf_dir, "orders")
-        save_bucketed(li.select("l_orderkey", "l_quantity"), "t_li_b", ["l_orderkey"], 8)
-        save_bucketed(o.select("o_orderkey", "o_totalprice"), "t_o_b", ["o_orderkey"], 8)
+        save_bucketed(li.select("l_orderkey", "l_quantity"), "t_li_b", 8, ["l_orderkey"])
+        save_bucketed(o.select("o_orderkey", "o_totalprice"), "t_o_b", 8, ["o_orderkey"])
         j = spark.table("t_li_b").join(
             spark.table("t_o_b"), F.col("l_orderkey") == F.col("o_orderkey")
         )

@@ -43,6 +43,10 @@ def test_insert_new_idempotent(spark, table_dir):
     assert t.insert_new(batch2, keys=["k"]) == 1  # only the new key
     assert t.read().count() == 3
 
+    empty = ParquetTable(spark, f"{table_dir}/empty")
+    assert empty.insert_new(batch.limit(0), keys=["k"]) == 0
+    assert empty.exists() and empty.read().count() == 0  # first write creates it
+
 
 def test_merge_upsert(spark, table_dir):
     t = ParquetTable(spark, table_dir)
